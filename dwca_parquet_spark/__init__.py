@@ -14,7 +14,7 @@ Layout:
     plans/        composed logical plans (dwca_flatten = the reference query)
     operators/    relational core + north-star ops (dedup, similarity, text,
                   multimodal, event windows)
-    functions/    portable column expressions (hashing, vectors, text stats)
+    functions/    portable column expressions (hashing, geometry)
     sinks/        parquet (zstd, versioned+latest, single-file), JSON-array
     streaming/    Structured Streaming variants of the event operators
 """

@@ -2,9 +2,8 @@
 
 The reference writes its outputs to S3 (``/root/reference/src/dwca_parquet/
 libs/parquet.py:48-51`` writes ``s3://bucket/...`` and probes existence with
-fsspec at ``:33``). Round 1 shipped ``pathlib.Path``-only sinks, which the
-judge flagged: on a real cluster the output path is an object-store URI and
-the driver's local filesystem is irrelevant.
+fsspec at ``:33``). On a real cluster the output path is an object-store
+URI and the driver's local filesystem is irrelevant.
 
 This module routes every sink-side filesystem operation (existence probe,
 commit-rename, copy, cleanup) through the JVM's ``org.apache.hadoop.fs.
@@ -123,16 +122,3 @@ def parent(path: str | Path) -> str:
         base, _, _ = rest.rpartition("/")
         return f"{scheme}://{base}"
     return str(Path(s).parent)
-
-
-def to_local(path: str | Path) -> Path | None:
-    """Local pathlib.Path for a plain path or file: URI; None otherwise."""
-    s = str(path)
-    if not has_scheme(s):
-        return Path(s)
-    if s.startswith("file:"):
-        rest = s[len("file:"):]
-        while rest.startswith("//"):
-            rest = rest[1:]
-        return Path(rest)
-    return None

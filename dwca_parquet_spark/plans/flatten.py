@@ -9,14 +9,13 @@ declaratively:
            *  (star-join of every extension onto the core, inner, on
                ext.<coreid> = core.<id>)
 
-Design decisions (SURVEY §1.3 quirks, honored behind flags):
+Reference quirks, reproduced verbatim (SURVEY §1.3):
 
-- ``footprint_from_core_only=True`` (default) reproduces the reference bug
-  where only CORE headers decide whether the footprintWKT branch exists
-  (``libs/dwca.py:37-42`` discards the extension-header union).
-- ``fix_latlon=False`` (default) keeps the reference's (lat, lon) argument
-  order to ST_Point (``query.sql:1``) — verbatim parity; True emits (lon,
-  lat) per the WKT spec.
+- Only CORE headers decide whether the footprintWKT branch exists
+  (``libs/dwca.py:37-42`` discards the extension-header union), so an
+  extension's footprintWKT never feeds ``geom``.
+- The point keeps the reference's (lat, lon) argument order to ST_Point
+  (``query.sql:1``): ``POINT (decimalLatitude decimalLongitude)``.
 - Inner joins drop core rows without extension matches — exactly the
   reference's fan-out/drop semantics (``query.sql:3-5``).
 - ``SELECT *`` over a join duplicates the id/coreid columns; Spark's parquet
@@ -27,6 +26,10 @@ Geometry: no native geometry type without Sedona, so ``geom`` is WKT text —
 ``coalesce(footprintWKT, 'POINT (lat lon)')`` — byte-comparable against the
 DuckDB oracle via ``ST_AsText``. A Sedona upgrade would swap the column for
 a GeometryType and register ST_* expressions; nothing else changes.
+
+Malformed footprintWKT becomes NULL and falls back to the point, where
+DuckDB's ST_GeomFromText would abort the whole conversion; valid WKT passes
+through byte-identical (modulo trim).
 
 Scale: extensions are typically ≪ core → broadcast hints; the core never
 shuffles for the star join. Number formatting for POINT wkt matches DuckDB's
@@ -56,24 +59,17 @@ def _fmt_coord(c: Column) -> Column:
     ).otherwise(as_str)
 
 
-def point_wkt(lat: Column, lon: Column, fix_latlon: bool = False) -> Column:
-    """WKT point. Reference passes (decimalLatitude, decimalLongitude) — lat
-    as x (``query.sql:1``); replicated verbatim unless fix_latlon."""
-    x, y = (lon, lat) if fix_latlon else (lat, lon)
+def point_wkt(lat: Column, lon: Column) -> Column:
+    """WKT point in the reference's argument order — lat as x
+    (``query.sql:1``)."""
     return F.when(
-        x.isNotNull() & y.isNotNull(),
-        F.concat(F.lit("POINT ("), _fmt_coord(x), F.lit(" "), _fmt_coord(y), F.lit(")")),
+        lat.isNotNull() & lon.isNotNull(),
+        F.concat(F.lit("POINT ("), _fmt_coord(lat), F.lit(" "), _fmt_coord(lon), F.lit(")")),
     )
 
 
 def dwca_flatten(
-    archive: DwcaArchive,
-    core_df: DataFrame,
-    ext_dfs: list[DataFrame],
-    footprint_from_core_only: bool = True,
-    fix_latlon: bool = False,
-    broadcast_extensions: bool = True,
-    validate_footprint: bool = True,
+    archive: DwcaArchive, core_df: DataFrame, ext_dfs: list[DataFrame]
 ) -> DataFrame:
     """Star-join + fid + geom — the rendered query.sql as a DataFrame plan."""
     out = core_df
@@ -84,30 +80,18 @@ def dwca_flatten(
             for colname in ext_df.columns
             if colname in taken
         }
-        e = ext_df.withColumnsRenamed(renames)
-        if broadcast_extensions:
-            e = F.broadcast(e)
+        e = F.broadcast(ext_df.withColumnsRenamed(renames))
         # join key may itself have been renamed — resolve after renaming
         ext_key = renames.get(layer.id_col, layer.id_col)
         out = out.join(e, out[archive.core.id_col] == e[ext_key], "inner")
         taken.update(e.columns)
 
-    if footprint_from_core_only:
-        has_footprint = FOOTPRINT_COL in archive.core.headers
-    else:
-        has_footprint = FOOTPRINT_COL in out.columns
-
     lat = F.col(LAT_COL) if LAT_COL in out.columns else F.lit(None).cast("double")
     lon = F.col(LON_COL) if LON_COL in out.columns else F.lit(None).cast("double")
-    point = point_wkt(lat, lon, fix_latlon)
-    # validate_footprint: malformed WKT → NULL → point fallback, where
-    # DuckDB's ST_GeomFromText would abort the whole conversion. Validation
-    # is a scan-stage regex (functions/geometry.py); valid WKT passes
-    # through byte-identical (modulo trim), so oracle parity is unaffected.
-    footprint = F.col(FOOTPRINT_COL).cast("string")
-    if validate_footprint:
-        footprint = validate_wkt(footprint)
-    geom = F.coalesce(footprint, point) if has_footprint else point
+    geom = point_wkt(lat, lon)
+    if FOOTPRINT_COL in archive.core.headers:
+        footprint = validate_wkt(F.col(FOOTPRINT_COL).cast("string"))
+        geom = F.coalesce(footprint, geom)
 
     return out.select(
         F.col(archive.core.id_col).alias("fid"),

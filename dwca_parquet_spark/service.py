@@ -21,8 +21,9 @@ heavy lifting inside each job is a distributed Spark plan, not driver code.
 
 Jobs:
 - ``job_version_to_parquet`` ⇔ ``libs/parquet.py:20-56``: fetch DwC-A,
-  flatten (star join), write versioned + latest parquet — skipped when the
-  versioned output already exists on the target filesystem.
+  flatten (star join), write versioned + latest parquet — skipped, before
+  anything is fetched, when the versioned output already exists on the
+  target filesystem.
 - ``job_csw``    ⇔ ``libs/csw.py:104-113``: harvest → 21-col record table
   → parquet at ``cfg.csw_path``.
 - ``job_geoapi`` ⇔ ``libs/geoapi.py:68-75``: harvest → pygeoapi configs →
@@ -40,7 +41,7 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from dwca_parquet_spark.plans.csw import (
     CatalogConfig,
@@ -98,43 +99,33 @@ class JobQueue:
 
     One worker because each job is itself a distributed Spark computation;
     queuing serializes cluster use the same way the reference's single RQ
-    worker does. ``inline=True`` executes synchronously (test/debug mode).
+    worker does.
     """
 
-    def __init__(self, inline: bool = False):
-        self._inline = inline
+    def __init__(self):
         self._ids = itertools.count(1)
         self.jobs: list[Job] = []
-        if not inline:
-            self._q: _queue.Queue = _queue.Queue()
-            self._worker = threading.Thread(target=self._run, daemon=True)
-            self._worker.start()
+        self._q: _queue.Queue = _queue.Queue()
+        threading.Thread(target=self._run, daemon=True).start()
 
     def enqueue(self, fn: Callable[..., Any], *args: Any) -> Job:
         job = Job(id=next(self._ids), name=getattr(fn, "__name__", str(fn)))
         self.jobs.append(job)
-        if self._inline:
-            self._execute(job, fn, args)
-        else:
-            self._q.put((job, fn, args))
+        self._q.put((job, fn, args))
         return job
-
-    def _execute(self, job: Job, fn: Callable, args: tuple) -> None:
-        job.status = "running"
-        try:
-            job.result = fn(*args)
-            job.status = "done"
-        except Exception:
-            job.status = "failed"
-            job.error = traceback.format_exc()
-        finally:
-            job._done.set()
 
     def _run(self) -> None:
         while True:
             job, fn, args = self._q.get()
-            self._execute(job, fn, args)
-            self._q.task_done()
+            job.status = "running"
+            try:
+                job.result = fn(*args)
+                job.status = "done"
+            except Exception:
+                job.status = "failed"
+                job.error = traceback.format_exc()
+            finally:
+                job._done.set()
 
     def join(self, timeout: float | None = None) -> None:
         for job in list(self.jobs):
@@ -153,14 +144,21 @@ def job_version_to_parquet(
     Reference ``libs/parquet.py:20-56``, with its fixes applied: the plan
     executes once (write + fs copy, not two executions), and the archive
     bytes go through the client's injectable fetch (mockable, same staging
-    lifecycle — the cache zip is deleted in ``finally``)."""
+    lifecycle — the cache zip is deleted in ``finally``). As in the
+    reference, an existing version is skipped before the archive is
+    fetched."""
     url = f"{cfg.catalog.ipt_url}/archive.do?r={resource_id}&v={version}"
     with tempfile.TemporaryDirectory(dir=cfg.staging_dir) as tmp:
-        cache = Path(tmp) / f"{resource_id}-v{version}.zip"
-        cache.write_bytes(client.fetch(url))
-        archive, core_df, ext_dfs = read_dwca(spark, cache, Path(tmp) / "staging")
-        flat = dwca_flatten(archive, core_df, ext_dfs)
-        return write_versioned(flat, cfg.resources_base, resource_id, version)
+
+        def flattened() -> DataFrame:
+            cache = Path(tmp) / f"{resource_id}-v{version}.zip"
+            cache.write_bytes(client.fetch(url))
+            archive, core_df, ext_dfs = read_dwca(spark, cache, Path(tmp) / "staging")
+            return dwca_flatten(archive, core_df, ext_dfs)
+
+        return write_versioned(
+            spark, cfg.resources_base, resource_id, version, flattened
+        )
 
 
 def job_csw(spark: SparkSession, client: IptClient, cfg: ServiceConfig) -> str:

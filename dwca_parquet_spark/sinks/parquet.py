@@ -24,8 +24,9 @@ commits give way to Spark's committer.
 from __future__ import annotations
 
 from pathlib import Path
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from dwca_parquet_spark.fs import FS, parent
 
@@ -71,11 +72,11 @@ def write_parquet(
 
 
 def write_versioned(
-    df: DataFrame,
+    spark: SparkSession,
     base_dir: str | Path,
     dataset_id: str,
     version: str | int,
-    single_file: bool = True,
+    build: Callable[[], DataFrame],
 ) -> tuple[str, str] | None:
     """Versioned + latest outputs, computing the plan ONCE.
 
@@ -85,14 +86,17 @@ def write_versioned(
     (``:48-51``) with write-once + filesystem-side copy. The existence
     probe runs on the path's own filesystem (S3 object probe on a real
     deployment), matching the reference's fsspec ``exists`` semantics.
+    ``build`` makes the DataFrame and runs only after the probe, so a skip
+    fetches and reads nothing (the reference probes before its download,
+    ``:33-42``).
     """
     base = str(base_dir).rstrip("/")
     versioned = f"{base}/{dataset_id}/v{version}.parquet"
     latest = f"{base}/{dataset_id}.parquet"
-    fs = FS(df.sparkSession, versioned)
+    fs = FS(spark, versioned)
     if fs.exists(versioned):
         return None
-    write_parquet(df, versioned, single_file=single_file)
+    write_parquet(build(), versioned, single_file=True)
     if fs.exists(latest):
         fs.delete(latest)
     fs.copy(versioned, latest)

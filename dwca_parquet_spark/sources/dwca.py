@@ -17,6 +17,9 @@ SQL string to DuckDB+zipfs; here the archive descriptor drives declarative
   (``libs/parquet.py:35-42``). At 100 TB the staging step is the ingest
   boundary: unpack once, convert to parquet early, and every downstream
   operator reads columnar.
+- ``ignoreHeaderLines`` is parsed but not honored: DuckDB's ``read_csv``
+  skips exactly one header line (``templates/query.sql:2,4``), so declared
+  comment/unit lines after the header reach the data in both engines alike.
 
 Schema policy: ``infer_schema=True`` mirrors DuckDB's sniffer
 (``templates/query.sql:2,4``; extensions use full-sample inference =
@@ -27,9 +30,6 @@ reads everything as string — differential tests use explicit casts.
 from __future__ import annotations
 
 import codecs
-import os
-import shutil
-import urllib.request
 import zipfile
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -56,7 +56,7 @@ class SourceLayer:
     encoding: str
     headers: list[str]
     id_col: str
-    ignore_header_lines: int = 1
+    ignore_header_lines: int = 1  # as declared; reads skip one line regardless
 
 
 @dataclass
@@ -67,10 +67,6 @@ class DwcaArchive:
     root: Path
     core: SourceLayer
     extensions: list[SourceLayer] = field(default_factory=list)
-
-    @property
-    def core_columns(self) -> list[str]:
-        return self.core.headers
 
 
 def _decode_sep(raw: str | None) -> str:
@@ -111,26 +107,18 @@ def _parse_layer(node: ElementTree.Element, root: Path) -> SourceLayer:
 
 
 def stage_archive(source: str | Path, staging_dir: str | Path) -> Path:
-    """Download (http/https) or copy a DwC-A zip, extract to staging_dir.
+    """Extract a local DwC-A zip into ``staging_dir`` and return that dir.
 
-    The cache-then-extract step mirrors reference ``libs/parquet.py:35-42``
-    (httpfs+zipfs don't compose there; Spark has no zip source here). The
-    caller owns the staging lifecycle (reference deletes in ``finally``,
-    ``parquet.py:52-54`` — use a tempfile.TemporaryDirectory context).
+    Spark has no zip source, so the archive is unpacked once, straight from
+    the zip the caller fetched (reference ``libs/parquet.py:35-42`` caches
+    then reads the same way). The caller owns the staging lifecycle (the
+    reference deletes in ``finally``, ``parquet.py:52-54`` — use a
+    tempfile.TemporaryDirectory context).
     """
     staging = Path(staging_dir)
-    staging.mkdir(parents=True, exist_ok=True)
-    src = str(source)
-    local_zip = staging / "archive.zip"
-    if src.startswith(("http://", "https://")):
-        with urllib.request.urlopen(src) as resp, open(local_zip, "wb") as out:
-            shutil.copyfileobj(resp, out)
-    else:
-        shutil.copy(src, local_zip)
-    extract_dir = staging / "extracted"
-    with zipfile.ZipFile(local_zip) as zf:
-        zf.extractall(extract_dir)
-    return extract_dir
+    with zipfile.ZipFile(source) as zf:
+        zf.extractall(staging)
+    return staging
 
 
 def parse_meta(extract_dir: str | Path) -> DwcaArchive:
@@ -165,42 +153,14 @@ def read_layer(
     archive: DwcaArchive,
     layer: SourceLayer,
     infer_schema: bool = True,
-    honor_ignore_header_lines: bool = False,
 ) -> DataFrame:
     """One layer → DataFrame via spark.read.csv (reference query.sql:2,4).
 
     samplingRatio=1.0 mirrors DuckDB's ``sample_size=-1`` full-table sniff
     on extensions. Multi-char separators are supported by Spark ≥3.0 so the
-    decoded meta.xml separator passes straight through.
-
-    ``honor_ignore_header_lines``: meta.xml can declare
-    ``ignoreHeaderLines > 1`` (header plus N-1 comment/unit lines). The
-    REFERENCE never consults it — DuckDB ``read_csv`` skips exactly one
-    header line (``templates/query.sql:2,4``), so lines 2..N leak into the
-    data. Default False preserves that verbatim behavior (oracle parity,
-    the §1.3 quirk discipline); True implements the declared semantics by
-    rewriting a trimmed copy at staging time — a driver-side streaming
-    pass, same order as the zip extraction that already ran there (header
-    skipping is inherently file-ordered work; Spark partitions have no
-    line-number notion)."""
-    path = archive.root / layer.location
-    skip = layer.ignore_header_lines - 1
-    if honor_ignore_header_lines and skip > 0:
-        # ALWAYS rewrite, via temp + atomic rename — a bare existence
-        # check would silently reuse a truncated copy (process killed
-        # mid-write) or a previous archive's copy left behind by a
-        # re-extraction into the same staging dir (code-review r12);
-        # the rewrite is one streaming pass over a file that was just
-        # extracted anyway.
-        trimmed = path.with_suffix(path.suffix + f".skip{skip}")
-        tmp = trimmed.with_suffix(trimmed.suffix + ".tmp")
-        with open(path, "rb") as src, open(tmp, "wb") as out:
-            out.write(src.readline())  # the real header line
-            for _ in range(skip):  # the declared junk lines
-                src.readline()
-            shutil.copyfileobj(src, out)
-        os.replace(tmp, trimmed)
-        path = trimmed
+    decoded meta.xml separator passes straight through. Exactly one header
+    line is skipped whatever ``ignoreHeaderLines`` declares, as DuckDB's
+    ``read_csv`` does in the reference."""
     reader = (
         spark.read.option("header", True)
         .option("sep", layer.sep)
@@ -209,7 +169,7 @@ def read_layer(
     )
     if infer_schema:
         reader = reader.option("inferSchema", True).option("samplingRatio", 1.0)
-    df = reader.csv(str(path))
+    df = reader.csv(str(archive.root / layer.location))
     return df.alias(layer.alias)
 
 
@@ -218,19 +178,12 @@ def read_dwca(
     source: str | Path,
     staging_dir: str | Path,
     infer_schema: bool = True,
-    honor_ignore_header_lines: bool = False,
 ) -> tuple[DwcaArchive, DataFrame, list[DataFrame]]:
-    """Full archive → (descriptor, core DataFrame, extension DataFrames).
-
-    ``honor_ignore_header_lines`` — see :func:`read_layer`; default False
-    preserves the reference's verbatim one-header-line behavior."""
+    """Full archive → (descriptor, core DataFrame, extension DataFrames)."""
     extract_dir = stage_archive(source, staging_dir)
     archive = parse_meta(extract_dir)
-    core_df = read_layer(
-        spark, archive, archive.core, infer_schema, honor_ignore_header_lines
-    )
+    core_df = read_layer(spark, archive, archive.core, infer_schema)
     ext_dfs = [
-        read_layer(spark, archive, ext, infer_schema, honor_ignore_header_lines)
-        for ext in archive.extensions
+        read_layer(spark, archive, ext, infer_schema) for ext in archive.extensions
     ]
     return archive, core_df, ext_dfs

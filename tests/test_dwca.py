@@ -25,9 +25,9 @@ from dwca_parquet_spark.sources.dwca import read_dwca
 from tests import dwca_fixtures as FX
 
 
-def _flatten(spark, zpath: Path, tmp: Path, **kw):
+def _flatten(spark, zpath: Path, tmp: Path):
     archive, core_df, ext_dfs = read_dwca(spark, zpath, tmp / "staging")
-    return archive, dwca_flatten(archive, core_df, ext_dfs, **kw)
+    return archive, dwca_flatten(archive, core_df, ext_dfs)
 
 
 def _canon(v) -> str:
@@ -46,7 +46,7 @@ def _rowlist(cols, rows) -> list[str]:
     return sorted("|".join(_canon(r[i]) for i in order) for r in rows)
 
 
-def _duck_oracle(archive, fix_core_only_quirk: bool = True):
+def _duck_oracle(archive):
     """Build the reference-semantics SQL over the extracted files."""
     con = duckdb.connect()
     core = archive.core
@@ -101,6 +101,8 @@ def test_core_only(spark, tmp_path):
     z = FX.build_archive(tmp_path, "v1", FX.core_rows(), FX.CORE_HEADERS)
     archive, flat = _flatten(spark, z, tmp_path)
     assert archive.extensions == []
+    geom = {r["fid"]: r["geom"] for r in flat.select("fid", "geom").collect()}
+    assert geom[1] == "POINT (58.12 7.15)"  # reference order: lat first (query.sql:1)
     _compare(flat, _duck_oracle(archive), "core_only", ["fid", "geom", "scientificName"])
 
 
@@ -166,11 +168,6 @@ def test_extension_wkt_ignored_core_only_quirk(spark, tmp_path):
     archive, flat = _flatten(spark, z, tmp_path)
     for r in flat.collect():
         assert r["geom"] is None or r["geom"].startswith("POINT"), r
-    # fixed mode uses the extension column
-    _, flat_fixed = _flatten(spark, z, tmp_path / "f", footprint_from_core_only=False)
-    assert all(
-        r["geom"].startswith("POLYGON") for r in flat_fixed.select("geom").collect()
-    )
 
 
 def test_latin1_encoding(spark, tmp_path):
@@ -208,16 +205,6 @@ def test_null_latlon_geom_null(spark, tmp_path):
     assert rows[3] is None and rows[6] is None
     assert rows[1].startswith("POINT")
     _compare(flat, _duck_oracle(archive), "null_latlon", ["fid", "geom"])
-
-
-def test_fix_latlon_mode(spark, tmp_path):
-    z = FX.build_archive(tmp_path, "v10", FX.core_rows(1), FX.CORE_HEADERS)
-    archive, flat_verbatim = _flatten(spark, z, tmp_path)
-    _, flat_fixed = _flatten(spark, z, tmp_path / "f", fix_latlon=True)
-    g_v = flat_verbatim.select("geom").first()["geom"]
-    g_f = flat_fixed.select("geom").first()["geom"]
-    assert g_v == "POINT (58.12 7.15)"  # reference order: lat first (query.sql:1)
-    assert g_f == "POINT (7.15 58.12)"  # corrected lon-lat
 
 
 def test_malformed_archive_errors(tmp_path):
@@ -280,58 +267,16 @@ def _oracle_readable(archive):
     )
 
 
-def _duck_oracle_honored(archive):
-    """Oracle for the HONORED ignoreHeaderLines semantics: skip the
-    declared header lines entirely and supply column names explicitly
-    (DuckDB has no skip-after-header, so header=false + skip=N +
-    names=[...] expresses 'header from meta, data from line N+1')."""
-    con = duckdb.connect()
-    core = archive.core
-
-    def rd(layer):
-        names = ", ".join(f"'{h}'" for h in layer.headers)
-        return (
-            f"read_csv('{archive.root / layer.location}', header=false, "
-            f"skip={layer.ignore_header_lines}, names=[{names}], "
-            f"delim='{layer.sep}', sample_size=-1)"
-        )
-
-    joins = [
-        f'JOIN {rd(ext)} AS {ext.alias} '
-        f'ON {ext.alias}."{ext.id_col}" = {core.alias}."{core.id_col}"'
-        for ext in archive.extensions
-    ]
-    point = (
-        "CASE WHEN decimalLatitude IS NOT NULL AND decimalLongitude IS NOT NULL "
-        "THEN 'POINT (' || CAST(decimalLatitude AS VARCHAR) || ' ' || "
-        "CAST(decimalLongitude AS VARCHAR) || ')' END"
-    )
-    geom = (
-        f"coalesce(CAST(footprintWKT AS VARCHAR), {point})"
-        if "footprintWKT" in core.headers
-        else point
-    )
-    sql = (
-        f'SELECT {core.alias}."{core.id_col}" AS fid, {geom} AS geom, * '
-        f"FROM {rd(core)} AS {core.alias} {' '.join(joins)}"
-    )
-    rel = con.sql(sql)
-    cols, rows = list(rel.columns), rel.fetchall()
-    con.close()
-    return cols, rows
-
-
 @pytest.mark.slow
 def test_hostile_archive_matrix(spark, tmp_path):
     """VERDICT r11 #6 — the §5.3 hostile list as ONE full cross product:
     {UTF-8, ISO-8859-1} × {',', TAB, multi-char '~~'} ×
     {all-matched, missing extension matches} × {ignoreHeaderLines 1, 2}
     × {no collision, duplicate column name} — every combination reads,
-    flattens, and matches the rendered-query.sql DuckDB oracle. The
-    ignoreHeaderLines=2 combos additionally prove BOTH modes: verbatim
-    (the reference never consults it — DuckDB read_csv skips exactly one
-    line, so the junk line leaks into typing, both engines alike) and
-    honored (the trimmed-staging path drops it; skip-N oracle)."""
+    flattens, and matches the rendered-query.sql DuckDB oracle. In the
+    ignoreHeaderLines=2 combos the junk line leaks into the data, as in
+    the reference: DuckDB read_csv skips exactly one line, both engines
+    alike."""
     import itertools
 
     from dwca_parquet_spark.sources.dwca import read_dwca
@@ -367,8 +312,6 @@ def test_hostile_archive_matrix(spark, tmp_path):
         )
         case = f"enc={enc} sep={sep!r} matched={matched} ihl={ihl} collide={collide}"
 
-        # verbatim mode (reference parity; junk leaks like DuckDB's
-        # 1-header-line read)
         staging = tmp_path / f"s{n}"
         archive, core_df, ext_dfs = read_dwca(spark, z, staging)
         flat = dwca_flatten(archive, core_df, ext_dfs)
@@ -377,7 +320,7 @@ def test_hostile_archive_matrix(spark, tmp_path):
         cols = ["fid", "geom", "scientificName", "measurementValue"]
         _compare(
             flat, _duck_oracle(_oracle_readable(archive)),
-            f"verbatim {case}", cols,
+            case, cols,
         )
         got = flat.collect()
         fids = {str(r["fid"]) for r in got}
@@ -386,7 +329,7 @@ def test_hostile_archive_matrix(spark, tmp_path):
             # without junk the fid set is exactly the matched core ids
             assert fids == {str(i) for i in ext_ids}, case
         else:
-            # verbatim quirk, both engines alike: the junk line exists in
+            # reference quirk, both engines alike: the junk line exists in
             # BOTH files, so junk-id joins junk-coreid and survives — the
             # oracle compare above already proved DuckDB agrees
             assert fids - {"#junk-comment-line"} == {
@@ -402,14 +345,3 @@ def test_hostile_archive_matrix(spark, tmp_path):
             ), case
         name_col = {r["scientificName"] for r in got}
         assert "Ærø señor" in name_col, case
-
-        # honored mode only differs when ihl > 1
-        if ihl == 2:
-            archive2, core2, exts2 = read_dwca(
-                spark, z, tmp_path / f"h{n}", honor_ignore_header_lines=True
-            )
-            flat2 = dwca_flatten(archive2, core2, exts2)
-            _compare(
-                flat2, _duck_oracle_honored(_oracle_readable(archive2)),
-                f"honored {case}", cols,
-            )

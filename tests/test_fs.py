@@ -10,9 +10,8 @@ local pathlib semantics.
 from __future__ import annotations
 
 import json
-from pathlib import Path
 
-from dwca_parquet_spark.fs import FS, parent, to_local
+from dwca_parquet_spark.fs import FS, parent
 from dwca_parquet_spark.sinks.csv import read_csv, write_csv
 from dwca_parquet_spark.sinks.jsonarray import write_json_array
 from dwca_parquet_spark.sinks.parquet import write_parquet, write_versioned
@@ -24,12 +23,9 @@ def _df(spark):
     )
 
 
-def test_parent_and_to_local():
+def test_parent():
     assert parent("s3a://bucket/a/b.parquet") == "s3a://bucket/a"
     assert parent("/x/y/z.parquet") == "/x/y"
-    assert to_local("/x/y") == Path("/x/y")
-    assert to_local("file:///x/y") == Path("/x/y")
-    assert to_local("s3a://bucket/x") is None
 
 
 def test_fs_ops_on_uri(spark, tmp_path):
@@ -64,14 +60,19 @@ def test_write_parquet_single_file_uri(spark, tmp_path):
 
 def test_write_versioned_uri_idempotent(spark, tmp_path):
     base = f"file://{tmp_path}/store"
-    got = write_versioned(_df(spark), base, "ds1", 2)
+    got = write_versioned(spark, base, "ds1", 2, lambda: _df(spark))
     assert got == (f"{base}/ds1/v2.parquet", f"{base}/ds1.parquet")
     assert (tmp_path / "store" / "ds1" / "v2.parquet").is_file()
     assert (tmp_path / "store" / "ds1.parquet").is_file()
-    # idempotency probe on the path's own filesystem: second call is a no-op
-    assert write_versioned(_df(spark), base, "ds1", 2) is None
+
+    # idempotency probe on the path's own filesystem: the second call is a
+    # no-op that never builds its DataFrame
+    def unreachable():
+        raise AssertionError("built a DataFrame for an existing version")
+
+    assert write_versioned(spark, base, "ds1", 2, unreachable) is None
     # a new version refreshes the latest alias
-    got3 = write_versioned(_df(spark).limit(1), base, "ds1", 3)
+    got3 = write_versioned(spark, base, "ds1", 3, lambda: _df(spark).limit(1))
     assert got3 is not None
     back = spark.read.parquet(f"{base}/ds1.parquet")
     assert back.count() == 1

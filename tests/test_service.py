@@ -5,6 +5,7 @@ resource→versioned-parquet conversion job through a mocked IPT."""
 from __future__ import annotations
 
 import json
+import zipfile
 from pathlib import Path
 
 import pytest
@@ -20,30 +21,42 @@ from tests import dwca_fixtures as FX
 from tests.test_catalog import EML, RSS
 
 
-@pytest.fixture()
-def svc(spark, tmp_path):
-    zips = {}
-    for rid in ("birds", "moths"):
-        (tmp_path / rid).mkdir()
-        zips[rid] = FX.build_archive(
-            tmp_path / rid, rid, FX.core_rows(), FX.CORE_HEADERS
-        )
+def _archive_bytes(tmp_path: Path, rid: str) -> bytes:
+    (tmp_path / rid).mkdir()
+    return FX.build_archive(
+        tmp_path / rid, rid, FX.core_rows(), FX.CORE_HEADERS
+    ).read_bytes()
+
+
+def _service(spark, tmp_path, archive, **cfg) -> ResourceService:
+    """The service over a mocked IPT whose ``archive.do`` serves
+    ``archive(resource_id)``."""
 
     def fetch(url: str) -> bytes:
         if url.endswith("/rss"):
             return RSS
         if "archive.do" in url:
-            rid = url.split("r=")[-1].split("&")[0]
-            return Path(zips[rid]).read_bytes()
-        rid = url.split("r=")[-1]
-        return EML[rid]
+            return archive(url.split("r=")[-1].split("&")[0])
+        return EML[url.split("r=")[-1]]
 
-    cfg = ServiceConfig(
+    config = ServiceConfig(
         catalog=CatalogConfig(ipt_url="https://ipt.test.org"),
         store=str(tmp_path / "store"),
+        **cfg,
     )
-    client = IptClient("https://ipt.test.org", fetch=fetch)
-    return ResourceService(spark, client, cfg, jobs=JobQueue(inline=True))
+    return ResourceService(
+        spark, IptClient("https://ipt.test.org", fetch=fetch), config
+    )
+
+
+def _files(d: Path) -> list[Path]:
+    return sorted(p for p in d.rglob("*") if p.is_file()) if d.exists() else []
+
+
+@pytest.fixture()
+def svc(spark, tmp_path):
+    zips = {rid: _archive_bytes(tmp_path, rid) for rid in ("birds", "moths")}
+    return _service(spark, tmp_path, zips.__getitem__)
 
 
 def test_list_resources(svc):
@@ -71,6 +84,60 @@ def test_get_resource_converts(svc, spark, tmp_path):
     svc.get_resource("birds")
     job2 = svc.jobs.jobs[-1].wait(120)
     assert job2.status == "done" and job2.result is None
+
+
+def test_repeat_version_skips_before_fetch(spark, tmp_path):
+    """A version already in the store is skipped before its archive is
+    fetched (the reference probes at ``libs/parquet.py:33`` before the
+    download at ``:35-42``), so a failing archive fetch cannot fail it."""
+    birds = _archive_bytes(tmp_path, "birds")
+    fetched = []
+
+    def archive(rid: str) -> bytes:
+        if fetched:
+            raise ConnectionError("IPT archive fetch failed")
+        fetched.append(rid)
+        return birds
+
+    svc = _service(spark, tmp_path, archive)
+    svc.get_resource("birds")
+    first = svc.jobs.jobs[-1].wait(120)
+    assert first.status == "done", first.error
+    svc.get_resource("birds")
+    again = svc.jobs.jobs[-1].wait(120)
+    assert again.status == "done", again.error
+    assert again.result is None
+    assert fetched == ["birds"]
+
+
+def test_hostile_archive_fails_cleanly(spark, tmp_path):
+    """A zip without meta.xml fails its job with an error naming meta.xml,
+    leaves the staging dir empty and writes nothing to the store; the next
+    resource on the same queue still converts."""
+    hostile = tmp_path / "no_meta.zip"
+    with zipfile.ZipFile(hostile, "w") as zf:
+        zf.writestr("occurrence.txt", "id,scientificName\n1,x\n")
+    archives = {
+        "moths": hostile.read_bytes(),
+        "birds": _archive_bytes(tmp_path, "birds"),
+    }
+    staging, store = tmp_path / "staging", tmp_path / "store"
+    staging.mkdir()
+    svc = _service(spark, tmp_path, archives.__getitem__, staging_dir=str(staging))
+
+    svc.get_resource("moths")
+    bad = svc.jobs.jobs[-1].wait(120)
+    assert bad.status == "failed"
+    assert "no meta.xml" in bad.error.strip().splitlines()[-1], bad.error
+    assert list(staging.iterdir()) == []
+    assert _files(store) == []
+
+    svc.get_resource("birds")
+    good = svc.jobs.jobs[-1].wait(120)
+    assert good.status == "done", good.error
+    assert good.result[0].endswith("/birds/v1.7.parquet")
+    assert {p.name for p in _files(store)} >= {"v1.7.parquet", "birds.parquet"}
+    assert list(staging.iterdir()) == []
 
 
 def test_generate_csw_and_geoapi(svc, spark, tmp_path):
