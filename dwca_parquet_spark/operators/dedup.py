@@ -5,15 +5,19 @@ Four families, all shuffle-conscious:
 
 - exact: hash-groupBy on a normalized-text fingerprint. One shuffle on the
   hash; at 100 TB this is the canonical map-side-combinable aggregation.
-- MinHash + LSH banding: shingle → portable hash → explode → ONE groupBy
-  computing all k min-aggregates (map-side combine ⇒ the shuffle carries at
-  most k values per doc, not the shingle stream) → band buckets → bucket
-  self-join for candidates → exact Jaccard verify. Candidate generation is
+- MinHash + LSH banding: ONE Arrow pass per document computes the distinct
+  k-shingle hashes, the 16 permutation minima and the band buckets; the
+  rows are shuffled on (band, bucket) and ONE NumPy kernel per bucket
+  counts every within-bucket pair's exact shingle intersection and emits
+  the pairs that reach the threshold. Text shingles and external hash
+  sets (multimodal frame hashes) share the kernel. Candidate work is
   O(pairs-sharing-a-bucket), never O(n²).
-- SimHash: same exploded shape, 32 conditional-sum aggregates → 32-bit
-  fingerprint; near-dups collide on fingerprint (or low Hamming distance).
-- n-gram Jaccard: exact set similarity on shingle-hash arrays — used both
-  standalone (bounded candidate sets) and as the LSH verify stage.
+- SimHash: the same per-document Arrow pass, 32 bit votes → 32-bit
+  fingerprint, no shuffle; near-dups collide on fingerprint (or low
+  Hamming distance).
+- n-gram Jaccard: exact set similarity on shingle-hash arrays
+  (``pair_jaccard``) — the bounded-candidate top-k and the incremental
+  probe's verify.
 
 Embedding-based near-dup lives in operators/similarity.py.
 
@@ -88,8 +92,9 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def shingle_hash_table(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
-    """(id, array<distinct shingle hashes>) — the input relation for MinHash,
-    SimHash and Jaccard. Computed once and reused by composition.
+    """(id, array<distinct shingle hashes>) in JVM expressions — the
+    relation :func:`pair_jaccard` verifies against. Docs shorter than k
+    get an empty array.
 
     Three staged projections (normalize → codepoints → shingle hashes):
     each stage's result is referenced multiple times by the next, which
@@ -104,35 +109,6 @@ def shingle_hash_table(
             H.shingle_hashes_from_codes(F.col("_codes"), k).alias("hashes"),
         )
     )
-
-
-def minhash_signatures(sh: DataFrame, id_col: str) -> DataFrame:
-    """MinHash signature columns mh0..mh{k-1} via explode + one aggregation.
-
-    Exploding then aggregating beats per-row array lambdas twice over: the
-    16 ``min`` aggregates map-side-combine (tiny shuffle), and codegen stays
-    small instead of inlining the shingle pipeline 16×.
-    """
-    exploded = sh.select(F.col(id_col), F.explode("hashes").alias("h"))
-    aggs = []
-    for j in range(H.MINHASH_K):
-        a, b = H._minhash_ab(j)
-        aggs.append(F.min((F.col("h") * a + b) % H.MINHASH_P).alias(f"mh{j}"))
-    return exploded.groupBy(id_col).agg(*aggs)
-
-
-def band_bucket_table(sigs: DataFrame, id_col: str) -> DataFrame:
-    """(id, band, bucket): one row per LSH band, bucket = folded band hash."""
-    bands = []
-    for band in range(H.MINHASH_BANDS):
-        lo = band * H.MINHASH_ROWS_PER_BAND
-        expr = F.lit(0).cast("long")
-        for r in range(lo, lo + H.MINHASH_ROWS_PER_BAND):
-            expr = (expr * H.HASH_BASE + F.col(f"mh{r}")) % H.HASH_MOD
-        bands.append(F.struct(F.lit(band).alias("band"), expr.alias("bucket")))
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
 def jaccard(a: str, b: str) -> F.Column:
@@ -219,8 +195,8 @@ def pair_jaccard(
     dominant exchange, a single-long hash/compare on the hot key, and
     a probe side narrow enough that AQE's runtime size measurement can
     elect a broadcast it refuses for the two-column equivalent.
-    Measured on the sf0.3 generated fixture (tools/
-    q30_stream_experiment.py): 84.7 → 12.6 s with bit-identical output
+    Measured on the sf0.3 generated fixture (SCALE.md, "q30
+    verify-stream experiment"): 84.7 → 12.6 s with bit-identical output
     checksums; the int32-hash lever measured FLAT (87 s) because
     UnsafeRow gives fixed-width fields 8-byte slots regardless.
     Ids outside the packable domain (strings, negatives, > 2^33) fall
@@ -304,144 +280,88 @@ def minhash_dup_pairs(
     k: int = 3,
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """LSH candidate pairs verified by exact shingle Jaccard ≥ threshold.
 
-    Returns (id_a, id_b, jaccard) with id_a < id_b.
+    Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded to 6
+    dp — the pairs the q30 oracle computes.
 
-    Shuffle/scale shape: the shingle table and bucket table are persisted —
-    the plan references ``sh`` three times (signature build + both verify
-    sides) and ``buckets`` twice, so without a persist the shingle regexes
-    re-run 3×. The bucket self-join is an equi-join on (band, bucket);
-    candidate count is Σ|bucket|² per band, never n². The Jaccard verify is
-    the explode/equi-join/groupBy form (see ``pair_jaccard``).
+    Shape: :func:`_shingle_minhash_buckets_arrow` computes each document's
+    distinct k-shingle hashes, 16 MinHash minima and band buckets in one
+    Arrow pass; :func:`_bucket_jaccard_pairs_arrow` shuffles the rows on
+    (band, bucket) and verifies every within-bucket pair in one NumPy
+    kernel. Work is Σ|bucket|² per band, never n², and only pairs near
+    the threshold cross back to the JVM.
+
+    ``threshold`` must be > 0 (``ValueError`` otherwise): a pair sharing
+    no shingle has Jaccard 0 and is never emitted.
 
     ``max_bucket_size``: optional skew guard for the 100 TB path — band
-    buckets larger than this are dropped *before* pair generation (a
-    degenerate bucket of m docs contributes m² candidates; a near-dup pair
-    lost this way is usually recovered by another of the BANDS−1 bands).
-    Default None = exact LSH semantics (what the DuckDB oracle computes).
-
-    ``eager``: materialize the persisted shingle/candidate tables with a
-    count() at build time, so the verify joins plan against known (cached)
-    sizes instead of estimates and the candidate distinct-aggregate is never
-    fused into the verify stage. At 100 TB you would checkpoint the
-    candidate set before an expensive verify anyway.
-
-    Round-12 (guide §4.2; the lid/simhash precedent): for k ≤ 5 the
-    shingle set, the 16 MinHash permutation minima AND the band buckets
-    all compute in ONE Arrow pass per document (exact integer NumPy —
-    the no-mod rolling hash is valid below HASH_MOD for printable ASCII
-    and k ≤ 5; permutation products < 2⁶¹; the band fold applies the
-    stepwise mod exactly like the JVM expression). One persisted table
-    serves the bucket join AND both verify sides, replacing the JVM
-    shingle projection + the 7.5M-row explode → 16-min groupBy + the
-    band fold. Values are bit-identical (pinned by the q30/q44 oracle
-    gates and test_properties' signature laws); the `hashes` arrays are
-    sorted (np.unique) rather than first-occurrence-ordered
-    (array_distinct) — set-equal, and every consumer (explode joins,
-    size counts, min aggregates) is order-free.
+    buckets larger than this are skipped (a degenerate bucket of m docs
+    contributes m² pairs; a near-dup pair lost this way is usually
+    recovered by another of the BANDS−1 bands). Default None = exact LSH
+    semantics (what the DuckDB oracle computes).
     """
-    if k <= 5:
-        if threshold is not None and threshold > 0:
-            # Round-13 (guide §2.4/§4.2; VERDICT r12 top-next): the whole
-            # candidate-generation + verify tail collapses into ONE
-            # per-(band,bucket) Arrow kernel. The old plan materialized
-            # Σ|bucket|² candidate pairs (472k at sf0.1), distinct-ed
-            # them, joined sizes twice, then streamed ~66M
-            # (pair × shingle) join rows into a count aggregate. The
-            # kernel computes every within-bucket pair's exact
-            # intersection by run-length pair counting over ONE sort of
-            # the bucket's hash multiset, and only NEAR-THRESHOLD pairs
-            # (j ≥ threshold − 1e-6 — wider than the 6-dp rounding
-            # half-ulp of 5e-7) ever leave Python. Cross-band duplicates
-            # carry bit-identical jaccard doubles (same exact integer
-            # inputs, same op order), so a distinct() collapses them;
-            # the exact round + cut stays JVM-side for oracle parity.
-            shb = _shingle_minhash_buckets_arrow(df, id_col, text_col, k)
-            pairs = _bucket_jaccard_pairs_arrow(
-                shb, id_col, threshold, max_bucket_size
-            )
-            return (
-                pairs.distinct()
-                .withColumn("jaccard", F.round(F.col("jaccard"), 6))
-                .filter(F.col("jaccard") >= threshold)
-                .select("id_a", "id_b", "jaccard")
-            )
-        shb = persist_tracked(
-            _shingle_minhash_buckets_arrow(df, id_col, text_col, k)
-        )
-        sh = shb.select(id_col, "hashes")
-        buckets = shb.select(
-            F.col(id_col), F.posexplode("_bkts").alias("band", "bucket")
-        )
-        return dup_pairs_from_hash_sets(
-            sh, id_col, threshold=threshold,
-            max_bucket_size=max_bucket_size, eager=eager, buckets=buckets,
-        )
-    sh = persist_tracked(shingle_hash_table(df, id_col, text_col, k))
-    return dup_pairs_from_hash_sets(
-        sh, id_col, threshold=threshold, max_bucket_size=max_bucket_size,
-        eager=eager,
+    return _bucket_jaccard_pairs_arrow(
+        _shingle_minhash_buckets_arrow(df, id_col, text_col, k),
+        id_col,
+        threshold,
+        max_bucket_size,
     )
 
 
-def _shingle_minhash_buckets_arrow(
-    df: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
-    """(id, hashes array<long>, _bkts array<long>): distinct k-shingle
-    hashes + the MINHASH_BANDS band buckets, one Arrow pass per document
-    (see minhash_dup_pairs' round-12 note). Docs whose normalized text is
-    NULL or shorter than k produce no row — identical to the explode
-    semantics of the JVM pipeline."""
-    staged = df.select(
-        F.col(id_col).alias("_id"),
-        H.normalize_text(F.col(text_col)).alias("_nt"),
-    ).filter(F.col("_nt").isNotNull() & (F.length("_nt") >= k))
-    pows = [H.HASH_BASE ** (k - 1 - j) for j in range(k)]
-    ab = np.array(
-        [H._minhash_ab(j) for j in range(H.MINHASH_K)], dtype=np.int64
-    )
-    A, B = ab[:, 0], ab[:, 1]
-    bands = H.MINHASH_BANDS
-    rpb = H.MINHASH_ROWS_PER_BAND
+_MINHASH_AB = np.array(
+    [H._minhash_ab(j) for j in range(H.MINHASH_K)], dtype=np.int64
+)
+
+
+def _shingle_hashes_np(nt: str, k: int) -> "np.ndarray":
+    """Sorted distinct k-shingle rolling hashes of one normalized text of
+    length ≥ k — value-identical to :func:`H.shingle_hashes_from_codes`.
+    The stepwise ``% HASH_MOD`` keeps every intermediate below
+    31·HASH_MOD + 127 < 2^35, so the fold is exact in int64 for any k."""
+    codes = np.frombuffer(nt.encode("ascii"), dtype=np.uint8).astype(np.int64)
+    n = codes.size - k + 1
+    h = codes[:n].copy()
+    for j in range(1, k):
+        h *= H.HASH_BASE
+        h += codes[j : n + j]
+        h %= H.HASH_MOD
+    return np.unique(h)
+
+
+def _band_buckets_np(hu: "np.ndarray") -> "np.ndarray":
+    """The MINHASH_BANDS band buckets of one non-empty hash set: the 16
+    permutation minima (a_j·h + b_j) % MINHASH_P — exact in int64 for
+    0 ≤ h < HASH_MOD, since a_j·h < 2^61 — folded per band with the same
+    stepwise % HASH_MOD as the oracle SQL."""
+    sigs = (hu[:, None] * _MINHASH_AB[:, 0] + _MINHASH_AB[:, 1]) % H.MINHASH_P
+    mh = sigs.min(axis=0).reshape(H.MINHASH_BANDS, H.MINHASH_ROWS_PER_BAND)
+    bk = np.zeros(H.MINHASH_BANDS, dtype=np.int64)
+    for r in range(H.MINHASH_ROWS_PER_BAND):
+        bk = (bk * H.HASH_BASE + mh[:, r]) % H.HASH_MOD
+    return bk
+
+
+def _with_band_buckets(staged: DataFrame, id_col: str, to_set) -> DataFrame:
+    """(id, hashes array<long>, _bkts array<long>) from ``staged``
+    (_id, _x): ``to_set`` maps one ``_x`` value to its sorted distinct
+    hash array, and ``_bkts`` holds that set's band buckets. Callers
+    stage only documents whose set is non-empty — a document without
+    one can never be a candidate."""
 
     def gen(batches):
         for pdf in batches:
-            ids, hs, bks = [], [], []
-            for rid, nt in zip(pdf["_id"], pdf["_nt"]):
-                codes = np.frombuffer(
-                    nt.encode("ascii"), dtype=np.uint8
-                ).astype(np.int64)
-                n = len(codes)
-                h = np.zeros(n - k + 1, dtype=np.int64)
-                for j, p in enumerate(pows):
-                    h += codes[j : n - k + 1 + j] * p
-                hu = np.unique(h)
-                # 16 permutation minima: (h·a_j + b_j) % P, exact int64
-                sigs = ((hu[:, None] * A[None, :]) + B[None, :]) % H.MINHASH_P
-                mh = sigs.min(axis=0)
-                # band fold with the stepwise mod, exactly the JVM expr
-                bk = np.empty(bands, dtype=np.int64)
-                for band in range(bands):
-                    acc = np.int64(0)
-                    for r in range(band * rpb, (band + 1) * rpb):
-                        acc = (acc * H.HASH_BASE + mh[r]) % H.HASH_MOD
-                    bk[band] = acc
-                ids.append(rid)
-                hs.append(hu)
-                bks.append(bk)
-            if ids:
-                yield pd.DataFrame({"_id": ids, "hashes": hs, "_bkts": bks})
-            else:
-                yield pd.DataFrame(
-                    {
-                        "_id": pdf["_id"].iloc[:0],
-                        "hashes": pd.Series([], dtype="object"),
-                        "_bkts": pd.Series([], dtype="object"),
-                    }
-                )
+            sets = [to_set(x) for x in pdf["_x"]]
+            yield pd.DataFrame(
+                {
+                    "_id": pdf["_id"].to_numpy(),
+                    "hashes": pd.Series(sets, dtype="object"),
+                    "_bkts": pd.Series(
+                        [_band_buckets_np(s) for s in sets], dtype="object"
+                    ),
+                }
+            )
 
     schema = (
         f"_id {dict(staged.dtypes)['_id']}, "
@@ -450,18 +370,36 @@ def _shingle_minhash_buckets_arrow(
     return staged.mapInPandas(gen, schema).withColumnRenamed("_id", id_col)
 
 
+def _shingle_minhash_buckets_arrow(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> DataFrame:
+    """(id, hashes, _bkts) for text documents: normalization stays a JVM
+    regex projection, then one Arrow pass per document computes the
+    distinct k-shingle hashes (sorted) and their band buckets. Docs whose
+    normalized text is NULL or shorter than k produce no row."""
+    staged = df.select(
+        F.col(id_col).alias("_id"),
+        H.normalize_text(F.col(text_col)).alias("_x"),
+    ).filter(F.col("_x").isNotNull() & (F.length("_x") >= k))
+    return _with_band_buckets(
+        staged, id_col, lambda nt: _shingle_hashes_np(nt, k)
+    )
+
+
 def _bucket_jaccard_pairs_arrow(
     shb: DataFrame,
     id_col: str,
     threshold: float,
     max_bucket_size: int | None,
 ) -> DataFrame:
-    """(id_a, id_b, jaccard) for every within-bucket pair near the
-    threshold — the fused candidate+verify stage of the k ≤ 5 LSH path.
+    """The verified LSH pairs (id_a, id_b, jaccard) of ``shb``'s
+    (id, hashes, _bkts) rows: every within-bucket pair whose exact
+    Jaccard, rounded to 6 dp, is ≥ ``threshold``, each pair once, with
+    id_a < id_b. The shared verify of :func:`minhash_dup_pairs` and
+    :func:`dup_pairs_from_hash_sets`; ``threshold`` must be > 0.
 
-    Input is :func:`_shingle_minhash_buckets_arrow`'s
-    (id, hashes, _bkts); each (band, bucket) group runs ONE NumPy
-    kernel (round-13; guide §4.2):
+    The rows are shuffled on (band, bucket) and each bucket runs ONE
+    NumPy kernel:
 
     - the group's hash arrays concatenate into a single multiset, one
       argsort groups equal hashes into runs, and every ordered pair of
@@ -471,16 +409,15 @@ def _bucket_jaccard_pairs_arrow(
       (first, second) pair has id_a-ordinal < id_b-ordinal);
     - pair increments accumulate by a packed ``i·m + j`` int64 key —
       ``np.bincount`` into an m² array when m ≤ 4096 (pure adds, no
-      sort), chunk-merged ``np.unique`` above (giant buckets; the
-      documented skew guard stays ``max_bucket_size`` — a degenerate
-      bucket is single-task quadratic work in EITHER verify plan);
+      sort), chunk-merged ``np.unique`` above (giant buckets; the skew
+      guard is ``max_bucket_size`` — a degenerate bucket is
+      single-task quadratic work);
     - every pair-stream temporary lives in a worker-lifetime scratch
-      pool and is written with ``out=``/``np.take`` (the round-11
-      ``_scratch`` page-fault lesson from similarity.py: fresh multi-MB
+      pool and is written with ``out=``/``np.take`` (fresh multi-MB
       allocations per group round-trip pages through the OS — measured
-      here at ~60 ns/element, 10-20× the warmed cost — while reused
-      buffers run at memory bandwidth), chunked to ~1M increments so
-      the pool stays a few tens of MB per worker;
+      at ~60 ns/element, 10-20× the warmed cost — while reused buffers
+      run at memory bandwidth), chunked to ~1M increments so the pool
+      stays a few tens of MB per worker;
     - jaccard = I/(|A|+|B|−I) in the exact op order of
       :func:`pair_jaccard`'s JVM projection (all operands are exact
       small integers in float64, so the division is bit-identical);
@@ -489,11 +426,14 @@ def _bucket_jaccard_pairs_arrow(
       ROUNDED jaccard can reach the threshold survives the margin).
 
     The docs are sorted by id inside the kernel, so emitted pairs have
-    id_a < id_b — the same orientation the bucket self-join produced.
-    Work per group is O(Σ|A| log Σ|A| + Σ_pairs |A∩B|): the intersection
-    increments the old plan materialized as join-output ROWS are now
-    in-register adds, and the pair stream that crosses back to the JVM
-    is O(near-threshold pairs), not O(candidates)."""
+    id_a < id_b. A pair sharing several buckets carries bit-identical
+    jaccard doubles from each (same exact integer inputs, same op
+    order), so one ``distinct`` collapses them; the exact round + cut
+    stays JVM-side for oracle parity. Work per group is
+    O(Σ|A| log Σ|A| + Σ_pairs |A∩B|), and the pair stream that crosses
+    back to the JVM is O(near-threshold pairs), not O(candidates)."""
+    if threshold is None or not threshold > 0:
+        raise ValueError(f"threshold must be > 0, got {threshold!r}")
     ex = shb.select(
         F.col(id_col).alias("_id"),
         "hashes",
@@ -607,7 +547,7 @@ def _bucket_jaccard_pairs_arrow(
         return ids[ia[keep]], ids[ib[keep]], jac[keep]
 
     def part_kern(batches) -> "pd.DataFrame":
-        # ONE Python call per shuffle partition (round 13): the
+        # ONE Python call per shuffle partition: the
         # per-group applyInPandas machinery measured ~1-3 ms of Arrow/
         # pandas overhead PER GROUP — 5084 buckets at sf0.1 made that
         # the dominant cost of the whole verify (a trivial per-group
@@ -666,8 +606,15 @@ def _bucket_jaccard_pairs_arrow(
             }
         )
 
-    return ex.repartition("_band", "_bucket").mapInPandas(
-        part_kern, f"id_a {id_dtype}, id_b {id_dtype}, jaccard double"
+    return (
+        ex.repartition("_band", "_bucket")
+        .mapInPandas(
+            part_kern, f"id_a {id_dtype}, id_b {id_dtype}, jaccard double"
+        )
+        .distinct()
+        .withColumn("jaccard", F.round(F.col("jaccard"), 6))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -676,47 +623,23 @@ def dup_pairs_from_hash_sets(
     id_col: str,
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
-    eager: bool = True,
-    buckets: DataFrame | None = None,
 ) -> DataFrame:
     """The modality-independent LSH pipeline: (id, hashes array<long>) →
-    verified Jaccard pairs. Text shingles (minhash_dup_pairs) and frame
-    hashes (multimodal.payload_neardup_pairs) both feed this; the input
-    ``sh`` must already be persisted (it is referenced by the signature
-    build and both verify sides). ``buckets``: pre-computed (id, band,
-    bucket) rows (minhash_dup_pairs' fused Arrow path); None builds them
-    from MinHash signatures over ``sh``."""
-    if buckets is None:
-        buckets = band_bucket_table(minhash_signatures(sh, id_col), id_col)
-    if max_bucket_size is not None:
-        w = Window.partitionBy("band", "bucket")
-        buckets = (
-            buckets.withColumn("_bsz", F.count(F.lit(1)).over(w))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .drop("_bsz")
-        )
-    buckets = persist_tracked(buckets)
-    left = buckets.alias("l")
-    right = buckets.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        .distinct()
+    verified Jaccard pairs (id_a, id_b, jaccard), exactly as
+    :func:`minhash_dup_pairs` computes them for text shingles. Frame
+    hashes (multimodal.payload_neardup_pairs / phash_neardup_pairs) feed
+    this: each document's array is taken as a set, its band buckets are
+    built in one Arrow pass, and :func:`_bucket_jaccard_pairs_arrow`
+    verifies. Hashes must lie in [0, HASH_MOD) — the permutation
+    products then stay exact in int64. Documents with a NULL or empty
+    array can never be candidates. ``threshold`` must be > 0."""
+    staged = sh.select(
+        F.col(id_col).alias("_id"), F.col("hashes").alias("_x")
+    ).filter(F.size("_x") > 0)
+    shb = _with_band_buckets(
+        staged, id_col, lambda a: np.unique(np.asarray(a, dtype=np.int64))
     )
-    cand = persist_tracked(cand, eager=eager)
-    return (
-        pair_jaccard(cand, sh, id_col, threshold=threshold)
-        .withColumn("jaccard", F.round(F.col("jaccard"), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _bucket_jaccard_pairs_arrow(shb, id_col, threshold, max_bucket_size)
 
 
 def connected_components(
@@ -939,7 +862,7 @@ def dedup_clusters(
         df, id_col, text_col, k, threshold, max_bucket_size
     )
     comp = connected_components(
-        pairs, assume_distinct=True  # verified pairs come out of the verify groupBy
+        pairs, assume_distinct=True  # the verify kernel's output is distinct
     ).withColumnRenamed("node", id_col)
     return (
         df.select(F.col(id_col))
@@ -954,87 +877,39 @@ def dedup_clusters(
 def simhash_fingerprints(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
-    """32-bit SimHash per document.
+    """32-bit SimHash per document: (id, simhash).
 
-    Round-12 shape for k ≤ 5 (guide §4.2; the _lid_bucket_counts
-    precedent): normalization stays a JVM regex projection; ONE
-    Arrow-batched mapInPandas then computes, per document, the distinct
-    k-shingle rolling hashes (for printable-ASCII codes and k ≤ 5 the
-    stepwise mod never fires — max intermediate 126·(31⁵−1)/30 < 10⁹+7
-    — so h = Σ c_j·31^(k−1−j) is VALUE-identical to the JVM fold; the
-    distinct set via np.unique, order-free for the vote sums), the 32
-    exact-integer bit votes s_b = 2·popcount_b − n, and the fingerprint
-    Σ 2^b [s_b > 0]. The old plan materialized the shingle table
-    (tracked persist — required: unpersisted, the staged projections
-    collapse into the consumer and re-evaluate the char-code transform
-    per shingle position, the measured round-2 552 s pathology), then
-    exploded 7.5M rows (sf0.1) into a groupBy with 32 interpreted
-    conditional sums. This path has zero shuffle, no persist, and no
-    exploded stream; outputs are bit-identical (exact integer
-    arithmetic over the same shingle set — pinned in test_text_ops).
-    Documents whose normalized text is NULL or shorter than k produce
-    no shingles and are dropped, exactly as the explode dropped them.
-
-    k > 5 keeps the persisted explode + 32-conditional-sum aggregation
-    (the stepwise mod matters there and stays in JVM expressions).
+    Normalization stays a JVM regex projection; ONE Arrow-batched
+    mapInPandas then computes, per document, the distinct k-shingle
+    rolling hashes (:func:`_shingle_hashes_np`, value-identical to the
+    JVM fold for any k), the 32 exact-integer bit votes
+    s_b = 2·popcount_b − n, and the fingerprint Σ 2^b [s_b > 0]. No
+    shuffle, no persist, no exploded shingle stream. Documents whose
+    normalized text is NULL or shorter than k have no shingles and get
+    no row.
     """
-    if k <= 5:
-        staged = df.select(
-            F.col(id_col).alias("_id"),
-            H.normalize_text(F.col(text_col)).alias("_nt"),
-        ).filter(F.col("_nt").isNotNull() & (F.length("_nt") >= k))
-        pows = [H.HASH_BASE ** (k - 1 - j) for j in range(k)]
-        shifts = np.arange(32, dtype=np.int64)
+    staged = df.select(
+        F.col(id_col).alias("_id"),
+        H.normalize_text(F.col(text_col)).alias("_nt"),
+    ).filter(F.col("_nt").isNotNull() & (F.length("_nt") >= k))
+    shifts = np.arange(32, dtype=np.int64)
 
-        def gen(batches):
-            for pdf in batches:
-                ids, fps = [], []
-                for rid, nt in zip(pdf["_id"], pdf["_nt"]):
-                    codes = np.frombuffer(
-                        nt.encode("ascii"), dtype=np.uint8
-                    ).astype(np.int64)
-                    n = len(codes)
-                    h = np.zeros(n - k + 1, dtype=np.int64)
-                    for j, p in enumerate(pows):
-                        h += codes[j : n - k + 1 + j] * p
-                    hu = np.unique(h)  # the array_distinct
-                    bits = (hu[:, None] >> shifts) & 1
-                    votes = 2 * bits.sum(axis=0, dtype=np.int64) - len(hu)
-                    ids.append(rid)
-                    fps.append(
-                        int(((votes > 0).astype(np.int64) << shifts).sum())
-                    )
-                if ids:
-                    yield pd.DataFrame({"_id": ids, "simhash": fps})
-                else:  # typed-empty frame: Arrow needs real dtypes
-                    yield pd.DataFrame(
-                        {
-                            "_id": pdf["_id"].iloc[:0],
-                            "simhash": pd.Series([], dtype="int64"),
-                        }
-                    )
-
-        schema = f"_id {dict(staged.dtypes)['_id']}, simhash long"
-        return staged.mapInPandas(gen, schema).withColumnRenamed(
-            "_id", id_col
-        )
-    sh = persist_tracked(shingle_hash_table(df, id_col, text_col, k))
-    exploded = sh.select(F.col(id_col), F.explode("hashes").alias("h"))
-    aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
-                -1
+    def gen(batches):
+        for pdf in batches:
+            fps = []
+            for nt in pdf["_nt"]:
+                hu = _shingle_hashes_np(nt, k)
+                votes = 2 * ((hu[:, None] >> shifts) & 1).sum(axis=0) - hu.size
+                fps.append(int(((votes > 0).astype(np.int64) << shifts).sum()))
+            yield pd.DataFrame(
+                {
+                    "_id": pdf["_id"].to_numpy(),
+                    "simhash": np.array(fps, dtype=np.int64),
+                }
             )
-        ).alias(f"s{i}")
-        for i in range(32)
-    ]
-    votes = exploded.groupBy(id_col).agg(*aggs)
-    fp = F.lit(0).cast("long")
-    for i in range(32):
-        fp = fp + F.when(F.col(f"s{i}") > 0, F.lit(2**i).cast("long")).otherwise(
-            F.lit(0)
-        )
-    return votes.select(F.col(id_col), fp.alias("simhash"))
+
+    schema = f"_id {dict(staged.dtypes)['_id']}, simhash long"
+    return staged.mapInPandas(gen, schema).withColumnRenamed("_id", id_col)
 
 
 def ngram_jaccard_topk(
@@ -1221,14 +1096,24 @@ FROM _n LEFT JOIN _a USING (id)
 def lsh_state(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> tuple[DataFrame, DataFrame]:
-    """The stored near-dup state for a corpus: (band-bucket table, shingle
-    table). Write both as parquet (bucketed on (band, bucket) and id
-    respectively for the co-located probe); advancing the state after an
-    accepted batch is appending the batch's own rows to each — the same
-    tables this function computes for the batch."""
-    sh = shingle_hash_table(df, id_col, text_col, k)
-    buckets = band_bucket_table(minhash_signatures(sh, id_col), id_col)
-    return buckets, sh
+    """The stored near-dup state for a corpus: (band-bucket table
+    (id, band, bucket), shingle table (id, hashes)), both from the same
+    Arrow build :func:`minhash_dup_pairs` runs. Write both as parquet
+    (bucketed on (band, bucket) and id respectively for the co-located
+    probe); advancing the state after an accepted batch is appending the
+    batch's own rows to each — the same tables this function computes
+    for the batch.
+
+    The ``hashes`` arrays are sorted sets, and a document with no
+    k-shingle gets no row in either table (it can never be a candidate).
+    States written in the older form — first-occurrence-ordered arrays,
+    empty arrays for short documents, the bit-identical bucket values —
+    probe the same (test_bloom.py)."""
+    shb = _shingle_minhash_buckets_arrow(df, id_col, text_col, k)
+    buckets = shb.select(
+        F.col(id_col), F.posexplode("_bkts").alias("band", "bucket")
+    )
+    return buckets, shb.select(id_col, "hashes")
 
 
 def minhash_dup_pairs_incremental(
@@ -1249,27 +1134,30 @@ def minhash_dup_pairs_incremental(
     Proved equal to running minhash_dup_pairs over history ∪ batch and
     keeping the cross pairs (test_bloom.py).
 
-    Scale shape: batch-side shingles/signatures are batch-sized work; the
+    Scale shape: the batch's shingles and buckets come from the same
+    Arrow build as :func:`lsh_state` — batch-sized work; the
     candidate join is an equi-join on (band, bucket) costing
     Σ_bucket |batch∩bucket|·|corpus∩bucket| — batch-proportional, never
     |corpus|²; the verify joins touch only candidate ids. With the state
     tables bucketed on their join keys the probe shuffles only the batch
     (the write_bucketed lever, same as CDC).
     """
-    b_sh = persist_tracked(shingle_hash_table(batch, id_col, text_col, k))
-    b_buckets = band_bucket_table(minhash_signatures(b_sh, id_col), id_col)
+    b_shb = persist_tracked(
+        _shingle_minhash_buckets_arrow(batch, id_col, text_col, k)
+    )
     h = state_buckets.select(
         F.col("band"), F.col("bucket"), F.col(id_col).alias("id_a")
     )
-    b = b_buckets.select(
-        F.col("band"), F.col("bucket"), F.col(id_col).alias("id_b")
+    b = b_shb.select(
+        F.col(id_col).alias("id_b"),
+        F.posexplode("_bkts").alias("band", "bucket"),
     )
     cand = persist_tracked(
         h.join(b, ["band", "bucket"]).select("id_a", "id_b").distinct(),
         eager=True,
     )
     sh_all = state_shingles.select(id_col, "hashes").unionByName(
-        b_sh.select(id_col, "hashes")
+        b_shb.select(id_col, "hashes")
     )
     return (
         pair_jaccard(cand, sh_all, id_col, threshold=threshold)

@@ -328,16 +328,16 @@ def phash_neardup_pairs(
     exact set-Jaccard verify) — only the frame fingerprint changed.
 
     The 63-bit phash is reduced mod HASH_MOD before entering the set
-    machinery: pair_jaccard's packed verify key requires hashes below
-    2^30 (dedup.py:181), and set-equality semantics only need a
-    deterministic injective-in-practice mapping (collision odds ~2^-30
-    per frame pair).
+    machinery: the LSH kernel's permutation products a_j·h stay exact
+    in int64 only for hashes below HASH_MOD (dedup._band_buckets_np),
+    and set-equality semantics only need a deterministic
+    injective-in-practice mapping (collision odds ~2^-30 per frame
+    pair).
     """
-    from dwca_parquet_spark.cache import persist_tracked
     from dwca_parquet_spark.operators.dedup import dup_pairs_from_hash_sets
 
     frames = phash_frames(binary_df, n_frames)
-    sh = persist_tracked(
+    sh = (
         frames.select(
             F.col("doc_id"), (F.col("phash") % HASH_MOD).alias("_fh")
         )
@@ -356,19 +356,18 @@ def payload_neardup_pairs(
     payloads sharing ≥ threshold of their frames are near-dups (re-encodes,
     trims, appended variants). Feeds the exact same modality-independent
     LSH pipeline as text shingles (dedup.dup_pairs_from_hash_sets), so the
-    scale/shuffle story — persisted hash table, band-bucket equi-join,
-    explode-join verify — is inherited, not re-implemented.
+    scale/shuffle story — one Arrow band-bucket build, one verify kernel
+    per (band, bucket) — is inherited, not re-implemented.
 
     Frame hash = (byte_sum·31 + n_bytes) mod HASH_MOD over the frame
     features sample_frames already computes — the blobs never leave the
-    Python worker; only 8-byte hashes enter the join graph.
+    Python worker; only 8-byte hashes enter the LSH pipeline.
     """
-    from dwca_parquet_spark.cache import persist_tracked
     from dwca_parquet_spark.operators.dedup import dup_pairs_from_hash_sets
 
     frames = sample_frames(binary_df, n_frames)
     fh = (F.col("byte_sum") * 31 + F.col("n_bytes")) % HASH_MOD
-    sh = persist_tracked(
+    sh = (
         frames.select(F.col("doc_id"), fh.alias("_fh"))
         .groupBy("doc_id")
         .agg(F.array_distinct(F.collect_list("_fh")).alias("hashes"))

@@ -779,8 +779,8 @@ def q29_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.dedup_exact(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-def _minhash_oracle() -> str:
-    sh = H.sql_shingle_hashes(_NORM_TEXT)
+def _minhash_oracle(k: int = 3, threshold: float = 0.5) -> str:
+    sh = H.sql_shingle_hashes(_NORM_TEXT, k)
     mins = []
     for j in range(H.MINHASH_K):
         a, b = H._minhash_ab(j)
@@ -814,7 +814,7 @@ def _minhash_oracle() -> str:
         FROM cand JOIN sh a ON cand.id_a = a.doc_id
                   JOIN sh b ON cand.id_b = b.doc_id
     )
-    SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= 0.5
+    SELECT id_a, id_b, jaccard FROM verified WHERE jaccard >= {threshold}
     """
 
 

@@ -162,3 +162,67 @@ def test_incremental_minhash_equals_cross_pairs_of_full_run(spark):
     )
     assert got == want
     assert len(got) > 0  # the fixture's planted near-dups span the split
+
+
+def test_incremental_minhash_probes_older_stored_state(spark, duck, tmp_path):
+    """A stored LSH state in the older form — JVM shingle_hash_table rows
+    (first-occurrence-ordered arrays, empty arrays for short docs, NULL
+    for a NULL text) plus the bucket table the oracle SQL computes,
+    written as parquet — probes to the same pairs as the state lsh_state
+    writes now, and lsh_state's buckets are bit-identical to it:
+    persisted states survive the upgrade. (First 100 docs only: the JVM
+    shingle table is slow to build.)"""
+    from dwca_parquet_spark import queries as Q
+    from dwca_parquet_spark.operators.dedup import (
+        lsh_state,
+        minhash_dup_pairs_incremental,
+        shingle_hash_table,
+    )
+
+    docs = (
+        spark.read.parquet(f"{SF_T2}/documents.parquet")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") < 100)
+    )
+    short = spark.createDataFrame(
+        [(10_000, ""), (10_001, "xy"), (10_002, None)],
+        docs.schema,
+    )
+    history = docs.filter(F.col("doc_id") % 4 != 0).unionByName(short)
+    batch = docs.filter(F.col("doc_id") % 4 == 0)
+
+    # the older bucket table: the q30 oracle's `bb` (short docs have none)
+    q30 = Q.ORACLES["q30_minhash_lsh_pairs"]
+    bb_sql = (
+        q30[: q30.index("cand AS (")].rstrip().rstrip(",")
+        + "\nSELECT doc_id, band, bucket FROM bb"
+        + " WHERE doc_id % 4 <> 0 AND doc_id < 100"
+    )
+    old_bb = sorted(duck.sql(bb_sql).fetchall())
+    spark.createDataFrame(
+        old_bb, "doc_id long, band int, bucket long"
+    ).write.parquet(str(tmp_path / "buckets"))
+    shingle_hash_table(history, "doc_id", "text").write.parquet(
+        str(tmp_path / "shingles")
+    )
+    old_buckets = spark.read.parquet(str(tmp_path / "buckets"))
+    old_shingles = spark.read.parquet(str(tmp_path / "shingles"))
+    assert old_shingles.filter(F.size("hashes") == 0).count() == 2
+    assert old_shingles.filter(F.col("hashes").isNull()).count() == 1
+
+    buckets, shingles = lsh_state(history, "doc_id", "text")
+    assert sorted(map(tuple, buckets.collect())) == old_bb
+    assert shingles.count() == history.count() - 3
+
+    def probe(b, s):
+        return sorted(
+            map(
+                tuple,
+                minhash_dup_pairs_incremental(
+                    batch, b, s, "doc_id", "text", threshold=0.5
+                ).collect(),
+            )
+        )
+
+    got = probe(old_buckets, old_shingles)
+    assert got == probe(buckets, shingles) and len(got) > 0

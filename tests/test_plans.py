@@ -78,44 +78,45 @@ def test_simhash_zero_shuffle(spark):
 
 
 def test_simhash_arrow_path_matches_jvm_aggregation(spark):
-    """Differential gate for the round-12 simhash rewrite: the Arrow
-    per-document kernel must reproduce the explode + 32-conditional-sum
-    JVM aggregation bit-for-bit over the same shingle sets (both are
-    exact integer arithmetic; the kernel's no-mod rolling hash is only
-    valid for k ≤ 5 — this pins it)."""
+    """Differential gate for the Arrow simhash kernel: it must reproduce
+    the explode + 32-conditional-sum JVM aggregation bit-for-bit over
+    the same shingle sets (both are exact integer arithmetic), at k = 3
+    and at k = 7, where the stepwise % HASH_MOD of the shingle fold
+    fires."""
     from dwca_parquet_spark.operators.dedup import (
         shingle_hash_table,
         simhash_fingerprints,
     )
 
     docs = spark.read.parquet(f"{SF_T2}/documents.parquet").limit(200)
-    got = {
-        (r["doc_id"], r["simhash"])
-        for r in simhash_fingerprints(docs, "doc_id", "text").collect()
-    }
-    sh = shingle_hash_table(docs, "doc_id", "text", 3).persist()
-    sh.count()
-    exploded = sh.select(F.col("doc_id"), F.explode("hashes").alias("h"))
-    aggs = [
-        F.sum(
-            F.when(
-                F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
-            ).otherwise(-1)
-        ).alias(f"s{i}")
-        for i in range(32)
-    ]
-    votes = exploded.groupBy("doc_id").agg(*aggs)
-    fp = F.lit(0).cast("long")
-    for i in range(32):
-        fp = fp + F.when(
-            F.col(f"s{i}") > 0, F.lit(2**i).cast("long")
-        ).otherwise(F.lit(0))
-    want = {
-        (r["doc_id"], r["simhash"])
-        for r in votes.select("doc_id", fp.alias("simhash")).collect()
-    }
-    sh.unpersist()
-    assert got == want
+    for k in (3, 7):
+        got = {
+            (r["doc_id"], r["simhash"])
+            for r in simhash_fingerprints(docs, "doc_id", "text", k).collect()
+        }
+        sh = shingle_hash_table(docs, "doc_id", "text", k).persist()
+        sh.count()
+        exploded = sh.select(F.col("doc_id"), F.explode("hashes").alias("h"))
+        aggs = [
+            F.sum(
+                F.when(
+                    F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
+                ).otherwise(-1)
+            ).alias(f"s{i}")
+            for i in range(32)
+        ]
+        votes = exploded.groupBy("doc_id").agg(*aggs)
+        fp = F.lit(0).cast("long")
+        for i in range(32):
+            fp = fp + F.when(
+                F.col(f"s{i}") > 0, F.lit(2**i).cast("long")
+            ).otherwise(F.lit(0))
+        want = {
+            (r["doc_id"], r["simhash"])
+            for r in votes.select("doc_id", fp.alias("simhash")).collect()
+        }
+        sh.unpersist()
+        assert got == want, f"k={k}"
 
 
 @pytest.mark.parametrize(

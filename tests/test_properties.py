@@ -281,9 +281,8 @@ def test_pair_jaccard_length_filter_lossless(spark):
     import random
 
     from dwca_parquet_spark.operators.dedup import (
-        band_bucket_table,
+        _shingle_minhash_buckets_arrow,
         dup_pairs_from_hash_sets,
-        minhash_signatures,
         pair_jaccard,
         shingle_hash_table,
     )
@@ -303,7 +302,9 @@ def test_pair_jaccard_length_filter_lossless(spark):
     def run(threshold):
         sh = persist_tracked(shingle_hash_table(df, "doc_id", "text", 3))
         buckets = persist_tracked(
-            band_bucket_table(minhash_signatures(sh, "doc_id"), "doc_id")
+            _shingle_minhash_buckets_arrow(df, "doc_id", "text", 3).select(
+                "doc_id", F.posexplode("_bkts").alias("band", "bucket")
+            )
         )
         l, r = buckets.alias("l"), buckets.alias("r")
         cand = (
